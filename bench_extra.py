@@ -21,35 +21,7 @@ import json
 import os
 import time
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "top_suppliers_per_nation",
-    "lineitem_rollup",
-    "events_daily",
-    "events_sessionization",
-    "events_running_total",
-    "kg_mention_counts",
-    "kg_cooccurrence_edges",
-    "kg_connected_components",
-    "kg_transitive_closure",
-    "kg_property_closure",
-    "dedup_lsh_banded",
-    "dedup_jaccard",
-    "dedup_embedding_lsh_bucketed",
-    "ann_cosine_scores",
-    "text_quality",
-    "text_token_stats",
-    "text_fingerprint",
-    "text_chunking",
-    "web_url_normalize",
-    "iri_normalize",
-    "curie_compact",
-    "top5_customer_sample_per_nation",
-    "events_json_props",
-    "kg_mentions_operator",
-]
+from bench import HEADLINE
 
 
 def _spark(master):

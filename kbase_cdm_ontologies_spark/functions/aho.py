@@ -70,27 +70,6 @@ class AhoCorasick:
 
 _WORDCH = set("abcdefghijklmnopqrstuvwxyz0123456789")
 
-try:  # optional C implementation (same automaton semantics) — not in
-    # this container's image; exercised wherever the wheel is present
-    import ahocorasick as _c_aho  # type: ignore
-except ImportError:
-    _c_aho = None
-
-
-class CAhoCorasick:
-    """pyahocorasick-backed drop-in (find() contract identical)."""
-
-    def __init__(self, patterns: list[str]):
-        self._a = _c_aho.Automaton()
-        for idx, pat in enumerate(patterns):
-            self._a.add_word(pat, (idx, len(pat)))
-        self._a.make_automaton()
-
-    def find(self, text: str, pattern_lens: list[int]) -> list[tuple[int, int]]:
-        return [
-            (idx, end - plen + 1) for end, (idx, plen) in self._a.iter(text)
-        ]
-
 
 class ScanFind:
     """Small-dictionary fast path: per-pattern C-speed ``str.find``
@@ -127,11 +106,8 @@ SCAN_FIND_MAX_PATTERNS = 128
 
 
 def build_automaton(patterns: list[str]):
-    """Fastest available automaton: C extension when installed; else
-    per-pattern C find-scans for small dictionaries; else the
+    """Per-pattern C find-scans for small dictionaries; else the
     pure-Python trie."""
-    if _c_aho is not None:
-        return CAhoCorasick(patterns)
     if len(patterns) <= SCAN_FIND_MAX_PATTERNS:
         return ScanFind(patterns)
     return AhoCorasick(patterns)

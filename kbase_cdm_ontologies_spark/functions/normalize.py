@@ -67,6 +67,10 @@ def compact_curies_expr(
     return df.select(*keep, expr.alias(out_col))
 
 
+# prefix-table rows up to which compact_curies compiles a CASE chain
+CURIE_EXPR_MAX_PREFIXES = 512
+
+
 def compact_curies(
     df: DataFrame, iri_col: str, prefix_table: DataFrame, out_col: str = "curie"
 ) -> DataFrame:
@@ -80,14 +84,15 @@ def compact_curies(
     shuffle, the query pipelines with the scan. The longest-match /
     prefix-asc tie order of the CASE is exactly the former window's
     (length(base) DESC, prefix ASC) ordering. A prefix table larger
-    than spark.graft.curie.exprMaxPrefixes (default 512 — far past any
-    real registry) falls back to the broadcast-join + window plan."""
-    from ..config import conf_threshold as _ct
-
+    than CURIE_EXPR_MAX_PREFIXES (far past any real registry) falls
+    back to the broadcast-join + window plan."""
     keep = list(df.columns)
-    cap = _ct(df.sparkSession, "spark.graft.curie.exprMaxPrefixes", 512)
-    probe = prefix_table.select("prefix", "base").limit(cap + 1).collect()
-    if len(probe) <= cap:
+    probe = (
+        prefix_table.select("prefix", "base")
+        .limit(CURIE_EXPR_MAX_PREFIXES + 1)
+        .collect()
+    )
+    if len(probe) <= CURIE_EXPR_MAX_PREFIXES:
         return compact_curies_expr(
             df, iri_col, [(r["prefix"], r["base"]) for r in probe], out_col
         )

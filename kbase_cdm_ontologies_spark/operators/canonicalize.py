@@ -30,8 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import conf_threshold as _conf_threshold
+from ..plans.regime import route
 from ..plans.stats_cut import cut as _statscut
+
+# edge rows at or below which the components are solved on the driver
+# (~16 MB of id pairs)
+CC_LOCAL_THRESHOLD = 500_000
 
 
 def _round(e: DataFrame) -> DataFrame:
@@ -112,13 +116,10 @@ def connected_components(
     count); a non-converged exit raises — the divergence alarm the
     build plan calls for (SURVEY.md §7.4).
 
-    local_threshold=None reads
-    spark.graft.connectedComponents.localThreshold (default 500k) —
-    the shared config namespace for every hybrid-regime row guard."""
+    local_threshold=None means CC_LOCAL_THRESHOLD; the driver side
+    also needs the edges under regime.DRIVER_MAX_BYTES."""
     if local_threshold is None:
-        local_threshold = _conf_threshold(
-            pairs, "spark.graft.connectedComponents.localThreshold", 500_000
-        )
+        local_threshold = CC_LOCAL_THRESHOLD
     # no stats-cut: nodes feeds exactly ONE join at the end, so the
     # BigInteger stats blow-up the cut guards against cannot occur, and
     # dropping it saves one checkpoint job per call
@@ -127,7 +128,7 @@ def connected_components(
         .unionByName(pairs.select(F.col(dst).alias("u")))
         .distinct()
     )
-    e = _statscut(
+    edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .dropDuplicates()
@@ -148,26 +149,20 @@ def connected_components(
         ).collect()[0]
         return int(row["n"]), int(row["h"])
 
-    converged = False
-    local = False
-    local_rows = None
-    # threshold probe doubles as the local-path data fetch: ONE
-    # limit-capped collect on the materialized edge set replaces the
-    # count job + a second full collect when the graph is already
-    # under the threshold (the common dimension-scale call). On bigger
-    # graphs the capped collect is one cheap extra job and the loop
-    # proceeds exactly as before.
-    if local_threshold > 0:
-        probe = e.limit(local_threshold + 1).collect()
-        if len(probe) <= local_threshold:
-            local = True
-            local_rows = probe
-    if not local:
+    # the lazy cut is routed: the route's aggregate materializes it, so
+    # the edge dedup runs once whichever side is taken
+    e = _statscut(edges)
+    _, pdf = route(e, local_threshold)
+    if pdf is None:
         sig_prev = _sig(e)
         for _ in range(max_rounds):
+            # contracted below the row bound (each round preserves
+            # connectivity, so any intermediate edge set yields the
+            # same components): finish on the driver
             if sig_prev[0] <= local_threshold:
-                local = True
-                break
+                _, pdf = route(e, local_threshold)
+                if pdf is not None:
+                    break
             e2 = _statscut(_round(e))
             sig_new = _sig(e2)
             # (count, hash) equality is the cheap per-round test; only
@@ -176,25 +171,24 @@ def connected_components(
             # the terminal round costs extra jobs
             if sig_new == sig_prev and e2.exceptAll(e).limit(1).count() == 0:
                 e = e2
-                converged = True
                 break
             e, sig_prev = e2, sig_new
-    if local:
-        if local_rows is None:
-            local_rows = e.collect()
+        else:
+            raise RuntimeError(
+                f"connected_components: no convergence in {max_rounds} rounds"
+            )
+    if pdf is not None:
         pairs_local = _local_union_find(
-            [(r["u"], r["v"]) for r in local_rows]
+            zip(pdf["u"].tolist(), pdf["v"].tolist())
         )
         # Arrow batch upload: the plain-list path pickles row-by-row
         # (~0.3 s per 50k rows inside the timed query)
         import pandas as pd
 
-        stars = e.sparkSession.createDataFrame(
+        stars = edges.sparkSession.createDataFrame(
             pd.DataFrame(pairs_local, columns=["u", "canonical"]),
-            schema=e.select("u", F.col("v").alias("canonical")).schema,
+            schema=edges.select("u", F.col("v").alias("canonical")).schema,
         )
-    elif not converged:
-        raise RuntimeError(f"connected_components: no convergence in {max_rounds} rounds")
     else:
         stars = e.groupBy("u").agg(F.min("v").alias("canonical"))
     roots = nodes.join(stars, "u", "left_anti").select(

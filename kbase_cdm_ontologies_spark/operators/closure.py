@@ -27,25 +27,36 @@ closure table is repartitioned by the join key each round.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import conf_threshold as _conf_threshold
 from ..plans.loop_tuning import ShufflePartitionTuner
+from ..plans.regime import route
 from ..plans.stats_cut import cut as _statscut
 from ..plans.stratify import build_schedule, may_fire, merge_strata
 
 # per-phase wall clocks of the LAST entail()/property_closure() run —
 # cleared at entail() entry, attached to the pipeline's checkpoint
 # manifest (plans/pipeline.py m7_edges metrics) so a cluster operator
-# gets the phase breakdown without any env flag. The
-# SPARK_GRAFT_DEBUG_CLOSURE env only controls PRINTING.
+# gets the phase breakdown without any env flag
 _PHASE_WALLS: dict[str, float] = {}
 
 
 def phase_walls() -> dict[str, float]:
     """Copy of the last closure run's per-phase wall seconds."""
     return dict(_PHASE_WALLS)
+
+
+# frontier-key broadcast cap of the fused property fixpoint: keys are
+# frontier endpoints, and a frontier past ~2M keys would blow the
+# session's broadcast budget
+BROADCAST_KEY_CAP = 2_000_000
+# premise-feed rows above which a property stratum runs alone through
+# its specialized evaluator instead of joining a fused batch
+BATCH_THRESHOLD = 1_000_000
 
 
 LOGIC_PREDICATES = (
@@ -192,10 +203,6 @@ def _seminaive_closure(
             F.col("b.o").alias("o"),
         )
 
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     news: list[DataFrame] = []
     owned: list[DataFrame] = []  # checkpoints created here — bounded cache
     # prior round's frontier count; callers that already counted their
@@ -204,109 +211,88 @@ def _seminaive_closure(
     # n_input (when the caller knows it) sizes per-round shuffles to
     # the relation, not the session default — see plans/loop_tuning.py
     n_c = n_input
-    tuner = ShufflePartitionTuner(c.sparkSession)
-    try:
-        return _seminaive_rounds(
-            c, delta, keyed, keep_self, max_rounds, both_sides, op,
-            return_new, consolidate, cols, hop_join, debug, _time,
-            news, owned, n_delta, n_c, tuner, anti_prefilter,
-            broadcast_rows,
-        )
-    finally:
-        tuner.restore()
-
-
-def _seminaive_rounds(
-    c, delta, keyed, keep_self, max_rounds, both_sides, op,
-    return_new, consolidate, cols, hop_join, debug, _time,
-    news, owned, n_delta, n_c, tuner, anti_prefilter=False,
-    broadcast_rows=200_000,
-):
-    for rnd_i in range(max_rounds):
-        t0 = _time.time()
-        tuner.tune(n_c)
-        # the stats-reset cuts (see plans/stats_cut.py) leave every loop
-        # frame at defaultSizeInBytes, so Catalyst never auto-broadcasts
-        # the frontier — but the DRIVER knows the frontier's exact row
-        # count from last round's action. Hinting broadcast for small
-        # frontiers skips the map-side shuffle of the (much larger)
-        # accumulated closure entirely; AQE would only downgrade the
-        # reduce-side fetch after both map stages already ran.
-        # 200k rows of ~200-byte triples ≈ 40 MB — inside the
-        # session's 64 MB broadcast budget with headroom for long IRIs
-        d_side = (
-            F.broadcast(delta)
-            if n_delta is not None and n_delta <= broadcast_rows
-            else delta
-        )
-        hop = hop_join(d_side, c)
-        if both_sides:
-            hop = hop.unionByName(hop_join(c, d_side))
-        if not keep_self:
-            hop = hop.where(F.col("s") != F.col("o"))
-        if anti_prefilter:
-            # incremental mode: materialize the (cone-sized) hop once,
-            # prune c to the hop's key slice via broadcast semi, and
-            # anti-join cone-vs-slice — c is scanned, never shuffled
-            hop_m = _statscut(hop.dropDuplicates(), eager=True)
-            key_cols = (["p"] if keyed else []) + ["s"]
-            c_slice = c.join(
-                F.broadcast(hop_m.select(*key_cols).distinct()),
-                key_cols,
-                "left_semi",
+    with ShufflePartitionTuner(c.sparkSession) as tuner:
+        for _ in range(max_rounds):
+            tuner.tune(n_c)
+            # the stats-reset cuts (see plans/stats_cut.py) leave every loop
+            # frame at defaultSizeInBytes, so Catalyst never auto-broadcasts
+            # the frontier — but the DRIVER knows the frontier's exact row
+            # count from last round's action. Hinting broadcast for small
+            # frontiers skips the map-side shuffle of the (much larger)
+            # accumulated closure entirely; AQE would only downgrade the
+            # reduce-side fetch after both map stages already ran.
+            # 200k rows of ~200-byte triples ≈ 40 MB — inside the
+            # session's 64 MB broadcast budget with headroom for long IRIs
+            d_side = (
+                F.broadcast(delta)
+                if n_delta is not None and n_delta <= broadcast_rows
+                else delta
             )
-            delta = _statscut(hop_m.join(c_slice, cols, "left_anti"))
-            owned.append(hop_m)
-        else:
-            delta = _statscut(
-                hop.dropDuplicates().join(c, cols, "left_anti")
-            )
-        n_delta = delta.count()
-        if n_c is not None:
-            n_c += n_delta
-        if debug:
-            print(f"[sn] {op} inner {rnd_i} delta={n_delta} "
-                  f"{_time.time() - t0:.1f}s", flush=True)
-        if n_delta == 0:
-            out_new = None
-            if return_new:
-                out_new = news[0] if news else c.limit(0)
-                for d in news[1:]:
-                    out_new = out_new.unionByName(d)
-            if not (consolidate and owned):
-                return (c, out_new) if return_new else c
-            # consolidate (calls embedded in an OUTER fixpoint): fold
-            # the result into ONE checkpoint and release the per-round
-            # copies — an outer loop that accumulates every inner
-            # round's checkpoint grows the storage pool past eviction
-            # and later rounds pay recompute/spill-reread of the whole
-            # chain. Standalone calls skip the extra copy.
-            # consolidate="new": the caller consumes ONLY the new
-            # frames (property_closure's incremental TC extension) —
-            # skip the full-closure copy, which would eagerly
-            # materialize a block-manager duplicate of the accumulated
-            # keyed closure every outer round just to be garbage.
-            if out_new is not None:
-                out_new = _statscut(out_new, eager=True)
-            out_c = None
-            if consolidate != "new":
-                out_c = _statscut(c, eager=True)
-            for f in owned:
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-            return (out_c, out_new) if return_new else out_c
-        # disjoint by construction (anti-join) — no dedup needed here
-        if anti_prefilter:
-            # plain union: c's parents are cut frames, re-cutting the
-            # union would copy the whole closure per round
-            c = c.unionByName(delta)
-            owned.append(delta)
-        else:
-            c = _statscut(c.unionByName(delta))
-            owned += [delta, c]
-        news.append(delta)
+            hop = hop_join(d_side, c)
+            if both_sides:
+                hop = hop.unionByName(hop_join(c, d_side))
+            if not keep_self:
+                hop = hop.where(F.col("s") != F.col("o"))
+            if anti_prefilter:
+                # incremental mode: materialize the (cone-sized) hop once,
+                # prune c to the hop's key slice via broadcast semi, and
+                # anti-join cone-vs-slice — c is scanned, never shuffled
+                hop_m = _statscut(hop.dropDuplicates(), eager=True)
+                key_cols = (["p"] if keyed else []) + ["s"]
+                c_slice = c.join(
+                    F.broadcast(hop_m.select(*key_cols).distinct()),
+                    key_cols,
+                    "left_semi",
+                )
+                delta = _statscut(hop_m.join(c_slice, cols, "left_anti"))
+                owned.append(hop_m)
+            else:
+                delta = _statscut(
+                    hop.dropDuplicates().join(c, cols, "left_anti")
+                )
+            n_delta = delta.count()
+            if n_c is not None:
+                n_c += n_delta
+            if n_delta == 0:
+                out_new = None
+                if return_new:
+                    out_new = news[0] if news else c.limit(0)
+                    for d in news[1:]:
+                        out_new = out_new.unionByName(d)
+                if not (consolidate and owned):
+                    return (c, out_new) if return_new else c
+                # consolidate (calls embedded in an OUTER fixpoint): fold
+                # the result into ONE checkpoint and release the per-round
+                # copies — an outer loop that accumulates every inner
+                # round's checkpoint grows the storage pool past eviction
+                # and later rounds pay recompute/spill-reread of the whole
+                # chain. Standalone calls skip the extra copy.
+                # consolidate="new": the caller consumes ONLY the new
+                # frames (property_closure's incremental TC extension) —
+                # skip the full-closure copy, which would eagerly
+                # materialize a block-manager duplicate of the accumulated
+                # keyed closure every outer round just to be garbage.
+                if out_new is not None:
+                    out_new = _statscut(out_new, eager=True)
+                out_c = None
+                if consolidate != "new":
+                    out_c = _statscut(c, eager=True)
+                for f in owned:
+                    try:
+                        f.unpersist()
+                    except Exception:
+                        pass
+                return (out_c, out_new) if return_new else out_c
+            # disjoint by construction (anti-join) — no dedup needed here
+            if anti_prefilter:
+                # plain union: c's parents are cut frames, re-cutting the
+                # union would copy the whole closure per round
+                c = c.unionByName(delta)
+                owned.append(delta)
+            else:
+                c = _statscut(c.unionByName(delta))
+                owned += [delta, c]
+            news.append(delta)
     raise RuntimeError(f"{op}: no fixpoint in {max_rounds} frontier rounds")
 
 
@@ -321,11 +307,12 @@ def transitive_closure(
     Semi-naive frontier doubling: max_rounds=20 covers diameter 2^20.
 
     Hybrid execution like connected_components: edge sets under
-    local_threshold are closed with one driver-side BFS (guarded by a
-    pair cap — a dense closure falls back to the distributed loop);
-    larger inputs run the semi-naive frontier rounds. local_threshold=0
-    forces the distributed loop; None reads
-    spark.graft.transitiveClosure.localThreshold (default 100k)."""
+    local_threshold rows and regime.DRIVER_MAX_BYTES are closed with
+    one driver-side BFS (guarded by a pair cap — a dense closure falls
+    back to the distributed loop); larger inputs run the semi-naive
+    frontier rounds. local_threshold=0 forces the distributed loop;
+    None reads spark.graft.transitiveClosure.localThreshold (default
+    100k)."""
     if local_threshold is None:
         local_threshold = _conf_threshold(
             edges, "spark.graft.transitiveClosure.localThreshold", 100_000
@@ -335,9 +322,12 @@ def transitive_closure(
         .where(F.col("s") != F.col("o"))
         .dropDuplicates()
     )
-    n_c = c.count() if local_threshold else None
-    if local_threshold and n_c <= local_threshold:
-        closed = _local_closure([("_", r["s"], r["o"]) for r in c.collect()], 5_000_000)
+    n_c, pdf = route(c, local_threshold)
+    if pdf is not None:
+        closed = _local_closure(
+            [("_", s, o) for s, o in zip(pdf["s"].tolist(), pdf["o"].tolist())],
+            5_000_000,
+        )
         if closed is not None:
             return _arrow_df(
                 c.sparkSession, [(s, o) for _k, s, o in closed], c.schema
@@ -459,22 +449,33 @@ def union_eliminated_subclass(
     (measured 3.8 s on the reference corpus).
 
     Hybrid like the other closure operators: a subclass+membership
-    graph under local_threshold edges (conf:
+    graph under local_threshold rows (conf:
     spark.graft.unionElimination.localThreshold, default 200k — the
-    schema layer of an ontology federation is dictionary-scale) runs
-    the identical fixpoint driver-side (the distributed loop costs
-    ~15 Spark actions of pure scheduler latency at that size);
-    local_threshold=0 forces the distributed loop."""
+    schema layer of an ontology federation is dictionary-scale) and
+    regime.DRIVER_MAX_BYTES runs the identical fixpoint driver-side
+    (the distributed loop costs ~15 Spark actions of pure scheduler
+    latency at that size); local_threshold=0 forces the distributed
+    loop."""
     if local_threshold is None:
         local_threshold = _conf_threshold(
             sub, "spark.graft.unionElimination.localThreshold", 200_000
         )
-    n_prev = sub.count()
-    if local_threshold and n_prev <= local_threshold:
-        edges = {(r["s"], r["o"]) for r in sub.collect()}
+    # ONE routed fetch of both driver inputs: membership rows tagged
+    graph = sub.select(F.lit(False).alias("m"), "s", "o").unionByName(
+        union_membership.select(
+            F.lit(True).alias("m"), F.col("bn").alias("s"),
+            F.col("member").alias("o"),
+        )
+    )
+    _, pdf = route(graph, local_threshold)
+    if pdf is not None:
+        edges: set = set()
         mem: dict = {}
-        for r in union_membership.collect():
-            mem.setdefault(r["bn"], set()).add(r["member"])
+        for m, s, o in zip(pdf["m"].tolist(), pdf["s"].tolist(), pdf["o"].tolist()):
+            if m:
+                mem.setdefault(s, set()).add(o)
+            else:
+                edges.add((s, o))
         out_edges, out_tc = _local_union_elimination(edges, mem, max_rounds)
         if out_edges is not None:
             spark = sub.sparkSession
@@ -482,6 +483,7 @@ def union_eliminated_subclass(
                 _arrow_df(spark, sorted(out_edges), sub.schema),
                 _arrow_df(spark, sorted(out_tc), sub.schema),
             )
+    n_prev = sub.count()
     card = F.broadcast(
         union_membership.groupBy("bn").agg(F.countDistinct("member").alias("k"))
     )
@@ -589,10 +591,11 @@ def keyed_transitive_closure(
         strip(edges.select(F.col(key).alias("p"), F.col(src).alias("s"), F.col(dst).alias("o")))
         .dropDuplicates()
     )
-    n_c = c.count() if local_threshold else None
-    if local_threshold and n_c <= local_threshold:
+    n_c, pdf = route(c, local_threshold)
+    if pdf is not None:
         closed = _local_closure(
-            [(r["p"], r["s"], r["o"]) for r in c.collect()], 5_000_000, keep_self
+            list(zip(pdf["p"].tolist(), pdf["s"].tolist(), pdf["o"].tolist())),
+            5_000_000, keep_self,
         )
         if closed is not None:
             return _arrow_df(c.sparkSession, closed, c.schema)
@@ -1058,10 +1061,6 @@ def _linear_fixpoint(
     `_seminaive_closure` and applying it in one join.
 
     Returns (consolidated eager frame, row count)."""
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     spark = seed.sparkSession
 
     def _hop(d: DataFrame, d_small: bool) -> DataFrame:
@@ -1095,16 +1094,13 @@ def _linear_fixpoint(
     # when the cleanse fires in round 0 (static_closed).
     acc: DataFrame = seed
     acc_upto = 1  # frames[:acc_upto] are folded into acc
-    tuner = ShufflePartitionTuner(spark)
-    try:
-        for rnd in range(cap):
-            t0 = _time.time()
+    with ShufflePartitionTuner(spark) as tuner:
+        for _ in range(cap):
             tuner.tune(n_static + n_delta)
             delta = _statscut(
                 _hop(delta, n_delta <= 200_000).dropDuplicates()
             )
             n_delta = delta.count()
-            cleansed = False
             if n_delta and (
                 static_closed
                 or (prev_n is not None and n_delta >= prev_n)
@@ -1115,15 +1111,7 @@ def _linear_fixpoint(
                     acc_upto = len(frames)
                 delta = _statscut(delta.join(acc, ["s", "o"], "left_anti"))
                 n_delta = delta.count()
-                cleansed = True
             prev_n = n_delta
-            if debug:
-                print(
-                    f"[lin] {op} {side} round {rnd} delta={n_delta}"
-                    f"{' (cleansed)' if cleansed else ''} "
-                    f"{_time.time() - t0:.1f}s",
-                    flush=True,
-                )
             if n_delta == 0:
                 out, n_out = _consolidate(frames)
                 for f in owned + frames[1:]:
@@ -1134,13 +1122,9 @@ def _linear_fixpoint(
                 return out, n_out
             frames.append(delta)
             owned.append(delta)
-    finally:
-        tuner.restore()
     # cap hit (diameter > cap): doubling fallback — close the STATIC
     # side once (O(log diameter) rounds) and apply it in one join:
     # static* ∘ seed == seed ∪ static⁺ ∘ seed (and symmetrically).
-    if debug:
-        print(f"[lin] {op} cap {cap} hit — doubling fallback", flush=True)
     st_closed = _seminaive_closure(
         static_df, static_df, keyed=False, keep_self=True,
         max_rounds=40, op=f"{op}.fallback", n_input=n_static,
@@ -1201,10 +1185,6 @@ def _generic_property_fixpoint(
 
     Returns the closed frame (synthetic ``_:step_*`` chain-step rows
     RETAINED — the caller filters them with its final projection))."""
-    import os as _os
-    import time as _time
-
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
     trans_list = sorted(transitive)
     chain_df = (
         F.broadcast(spark.createDataFrame(chains, ["p1", "p2", "r"]))
@@ -1263,10 +1243,8 @@ def _generic_property_fixpoint(
     # transitivity or 64 chain/union alternations — far past any real
     # ontology, and each round is one cheap action
     flat_rounds = max(max_rounds, 64)
-    tuner = ShufflePartitionTuner(spark)
-    try:
+    with ShufflePartitionTuner(spark) as tuner:
         for rnd in range(flat_rounds):
-            t0 = _time.time()
             tuner.tune(n_delta if warm else n_r)
             d_small = n_delta is not None and n_delta <= 200_000
             # warm + no union rule: every rule premise that reads the
@@ -1282,12 +1260,9 @@ def _generic_property_fixpoint(
             # would blow the session's broadcast budget — fall back to
             # plain joins and let AQE pick the strategy from runtime
             # sizes.
-            bkey_cap = _conf_threshold(
-                r, "spark.graft.closure.broadcastKeyCap", 2_000_000
-            )
             _bc = (
                 F.broadcast
-                if (n_delta is not None and n_delta <= bkey_cap)
+                if (n_delta is not None and n_delta <= BROADCAST_KEY_CAP)
                 else (lambda d: d)
             )
             if warm_slice:
@@ -1367,7 +1342,7 @@ def _generic_property_fixpoint(
                 # broadcast gets its own count (cheap: materialized)
                 _bc_new = (
                     F.broadcast
-                    if new_m.count() <= bkey_cap
+                    if new_m.count() <= BROADCAST_KEY_CAP
                     else (lambda d: d)
                 )
                 r_slice = r.join(
@@ -1388,9 +1363,6 @@ def _generic_property_fixpoint(
                     prev_delta.unpersist()
                 except Exception:
                     pass
-            if debug:
-                print(f"[pc] flat round {rnd} delta={n_delta} "
-                      f"{_time.time() - t0:.1f}s", flush=True)
             if n_delta == 0:
                 # a COUNT, not seconds: keep it out of the per-phase
                 # wall-seconds namespace consumed by the manifest
@@ -1423,8 +1395,6 @@ def _generic_property_fixpoint(
                 except Exception:
                     pass
             scratch = False
-    finally:
-        tuner.restore()
     raise RuntimeError(f"property_closure: no fixpoint in {flat_rounds} rounds")
 
 
@@ -1436,7 +1406,6 @@ def property_closure(
     union_members: dict[str, list[str]] | None = None,
     max_rounds: int = 10,
     local_threshold: int | None = None,
-    driver_max_bytes: int = 256 << 20,
     keep_steps: bool = False,
 ) -> DataFrame:
     """Saturate (s, p, o) existential edges under the EL property rules:
@@ -1460,10 +1429,9 @@ def property_closure(
     Hybrid execution like the other closure operators: an ontology's
     property-edge graph is dictionary-scale relative to the corpus
     (the reference's full test tier is ~1M base links), so below
-    local_threshold rows AND driver_max_bytes estimated payload
-    (config: spark.graft.propertyClosure.driverMaxBytes) the saturation
-    runs driver-side with the identical rule set. local_threshold=0
-    forces the distributed loop."""
+    local_threshold rows AND regime.DRIVER_MAX_BYTES payload the
+    saturation runs driver-side with the identical rule set.
+    local_threshold=0 forces the distributed loop."""
     spark = base_edges.sparkSession
     if local_threshold is None:
         local_threshold = _conf_threshold(
@@ -1483,57 +1451,40 @@ def property_closure(
     # measured: the fixpoint's inner rounds grew 3 s -> 130 s on
     # shrinking deltas until the base was cut eagerly (66 s total from
     # a clean-lineage input vs 620+ s from the live join plan).
-    r = _statscut(
-        base_edges.select("s", "p", "o").dropDuplicates(), eager=True
-    )
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    _tp = _time.time()
+    _tp = time.time()
 
     def _pphase(name: str) -> None:
         nonlocal _tp
-        now = _time.time()
+        now = time.time()
         _PHASE_WALLS["property_closure." + name] = round(now - _tp, 3)
-        if _dbg:
-            print(f"[pc-driver] {name} {now - _tp:.1f}s", flush=True)
         _tp = now
 
+    r = _statscut(
+        base_edges.select("s", "p", "o").dropDuplicates(), eager=True
+    )
     _pphase("base_materialize")
     needs_fixpoint = bool(transitive or chains or union_members)
-    if local_threshold and needs_fixpoint:
-        if r.count() <= local_threshold:
-            # bytes-aware driver guard: the row threshold alone could
-            # admit multi-GB string payloads on a small-driver cluster
-            conf = spark.conf.get("spark.graft.propertyClosure.driverMaxBytes", None)
-            max_bytes = int(conf) if conf else driver_max_bytes
-            est = r.select(
-                F.sum(F.length("s") + F.length("p") + F.length("o")).alias("b")
-            ).collect()[0]["b"]
-            if (est or 0) <= max_bytes:
-                _pphase("count+bytes_guard")
-                # Arrow collection: toPandas() batches columns through
-                # Arrow (~5x faster than collect()'s per-row pickling
-                # at the 2M-row driver ceiling)
-                pdf = r.toPandas()
-                rows_in = set(
-                    zip(pdf["s"].tolist(), pdf["p"].tolist(), pdf["o"].tolist())
-                )
-                _pphase("collect")
-                closed = _local_property_saturation(
-                    rows_in, hierarchy, transitive, chains, union_members,
-                    keep_steps=keep_steps,
-                )
-                _pphase("saturate")
-                # sorted: set-iteration order varies with string
-                # hashing across processes, and byte-identical re-runs
-                # (export content hashes, parquet diffs) are a stated
-                # engine property; the sort costs <1 s at the 2M-row
-                # driver-path ceiling
-                out = _arrow_df(spark, sorted(closed), r.schema)
-                _pphase("sort+arrow")
-                return out
+    _, pdf = route(
+        r, local_threshold if needs_fixpoint else 0,
+        on_decided=lambda: _pphase("count+bytes_guard"),
+    )
+    if pdf is not None:
+        rows_in = set(
+            zip(pdf["s"].tolist(), pdf["p"].tolist(), pdf["o"].tolist())
+        )
+        _pphase("collect")
+        closed = _local_property_saturation(
+            rows_in, hierarchy, transitive, chains, union_members,
+            keep_steps=keep_steps,
+        )
+        _pphase("saturate")
+        # sorted: set-iteration order varies with string hashing across
+        # processes, and byte-identical re-runs (export content hashes,
+        # parquet diffs) are a stated engine property; the sort costs
+        # <1 s at the 2M-row driver-path ceiling
+        out = _arrow_df(spark, sorted(closed), r.schema)
+        _pphase("sort+arrow")
+        return out
 
     def expand_hierarchy(df: DataFrame) -> DataFrame:
         if not hier_rows:
@@ -1658,9 +1609,6 @@ def property_closure(
             out = out.where(F.col("p").isin(*sorted(props)))
         return out
 
-    debug = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    import time as _time
-
     # Driver-side per-property link counts (ONE action, schema-scale
     # result), maintained incrementally as strata derive. They buy two
     # things the plain stratum-per-component walk cannot afford (181
@@ -1679,9 +1627,6 @@ def property_closure(
         row["p"]: row["cnt"]
         for row in r.groupBy("p").agg(F.count("*").alias("cnt")).collect()
     }
-    batch_threshold = _conf_threshold(
-        spark, "spark.graft.propertyClosure.batchThreshold", 1_000_000
-    )
 
     def _premises(st) -> set:
         prem = set(st.trans) | set(st.props)
@@ -1695,8 +1640,7 @@ def property_closure(
     pending: list = []
     pending_concl: set = set()
 
-    def run_unit(st, label: str) -> None:
-        t_st = _time.time()
+    def run_unit(st) -> None:
         comp = sorted(st.props)
         lift_sources = {p for p, _q in st.lifts}
         if st.kind == "generic":
@@ -1819,12 +1763,6 @@ def property_closure(
         for row in rows:
             prop_counts[row["p"]] = prop_counts.get(row["p"], 0) + row["cnt"]
             n_new += row["cnt"]
-        if debug:
-            print(
-                f"[pc] {label} {comp if len(comp) <= 6 else len(comp)} "
-                f"({st.kind}) new={n_new} {_time.time() - t_st:.1f}s",
-                flush=True,
-            )
         if n_new:
             link_frames.append(new)
 
@@ -1832,10 +1770,7 @@ def property_closure(
         nonlocal pending, pending_concl
         if not pending:
             return
-        if len(pending) == 1:
-            run_unit(pending[0], "stratum")
-        else:
-            run_unit(merge_strata(pending), f"batch[{len(pending)}]")
+        run_unit(pending[0] if len(pending) == 1 else merge_strata(pending))
         pending = []
         pending_concl = set()
 
@@ -1845,12 +1780,12 @@ def property_closure(
         has_links = {p for p, n in prop_counts.items() if n > 0} | pending_concl
         if not may_fire(st, has_links):
             continue
-        if sum(prop_counts.get(p, 0) for p in _premises(st)) > batch_threshold:
+        if sum(prop_counts.get(p, 0) for p in _premises(st)) > BATCH_THRESHOLD:
             # big feed: flush the small batch first (it may feed this
             # stratum — dependency order), then run alone through the
             # specialized evaluator
             flush_pending()
-            run_unit(st, "stratum")
+            run_unit(st)
         else:
             pending.append(st)
             pending_concl |= set(st.props)
@@ -2176,19 +2111,13 @@ def entail(
     table, property links WITH chain-step rows, type asserts, schema) —
     the warm-start state operators/delta_entail.py resumes from when
     new statements are added. Output is unchanged."""
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    _t = _time.time()
+    _t = time.time()
     _PHASE_WALLS.clear()
 
     def _phase(name: str) -> None:
         nonlocal _t
-        now = _time.time()
+        now = time.time()
         _PHASE_WALLS["entail." + name] = round(now - _t, 3)
-        if _dbg:
-            print(f"[entail] {name} {now - _t:.1f}s", flush=True)
         _t = now
 
     # materialize the pruned+interned statements ONCE: property_schema,

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"\s+"
+# per-doc token-set rows up to which jaccard_pairs_sets broadcasts them
+JACCARD_BROADCAST_SET_ROWS = 200_000
 
 
 def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -210,26 +212,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_signatures_from_tokens(toks: DataFrame, k: int = 8) -> DataFrame:
-    """(id, seed, sig) from a prepared (id, token) frame — the shared
-    signature stage: compute tokens ONCE (persist at the call site) and
-    feed both candidate generation and exact verification.
-
-    Shape: ONE groupBy with k min-aggregates (map-side combined), then
-    an unpivot — not a tokens×seeds crossJoin, which would multiply the
-    shuffle volume by k. Duplicate tokens need no distinct: min() is
-    idempotent."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("token")))).alias(f"_s{s}")
-        for s in range(k)
-    ]
-    wide = toks.groupBy("id").agg(*aggs)
-    stack = ", ".join(f"{s}, _s{s}" for s in range(k))
-    return wide.select(
-        "id", F.expr(f"stack({k}, {stack}) AS (seed, sig)")
-    ).select("id", F.col("seed").cast("int").alias("seed"), "sig")
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, k: int = 8
 ) -> DataFrame:
@@ -403,66 +385,27 @@ def banded_lsh_jaccard(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    candidates: DataFrame,
-    threshold: float = 0.5,
-    tokens_df: DataFrame | None = None,
-) -> DataFrame:
-    """Exact token-set Jaccard over candidate pairs:
-    (id_a, id_b, jaccard) with jaccard >= threshold.
-
-    Token-level join form: shuffles (id, token) rows — robust when
-    single documents are huge. For bounded-size documents prefer
-    jaccard_pairs_sets (one array_intersect per pair, no token-level
-    fan-out shuffle)."""
-    toks = tokens_df if tokens_df is not None else tokens(df, id_col, text_col)
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
-    ta = toks.select(F.col("id").alias("id_a"), "token")
-    tb = toks.select(F.col("id").alias("id_b"), "token")
-    inter = (
-        candidates.join(ta, "id_a")
-        .join(tb, ["id_b", "token"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n_tok").alias("na")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_tok").alias("nb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def jaccard_pairs_sets(
     toks: DataFrame,
     candidates: DataFrame,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact token-set Jaccard over candidates via per-doc token arrays:
-    two equi-joins + one JVM array_intersect per pair, instead of the
-    token-level fan-out join + groupBy of jaccard_pairs. The right
-    shape when per-document token sets are bounded (web pages): the
-    heavy shuffle is two (id -> array) joins on the candidate ids, and
-    intersections never leave whole-stage codegen.
+    (id_a, id_b, jaccard) with jaccard >= threshold — two equi-joins +
+    one JVM array_intersect per pair, no token-level fan-out join +
+    groupBy. The right shape when per-document token sets are bounded
+    (web pages): the heavy shuffle is two (id -> array) joins on the
+    candidate ids, and intersections never leave whole-stage codegen.
 
     toks: either the long (id, token) form (grouped to sets here) or a
     token_arrays (id, toks) frame, used directly — the zero-shuffle
     path.
 
     Attach-join strategy: when the per-doc set frame is provably small
-    (one count, conf spark.graft.jaccard.broadcastSetRows, default
-    200k — sized so token arrays stay inside the broadcast budget),
-    broadcast it on BOTH sides so the candidate pairs never shuffle;
-    a corpus-scale set frame falls back to shuffled joins under AQE."""
-    from ..config import conf_threshold as _conf_threshold
-
+    (one count, at most JACCARD_BROADCAST_SET_ROWS — sized so token
+    arrays stay inside the broadcast budget), broadcast it on BOTH
+    sides so the candidate pairs never shuffle; a corpus-scale set
+    frame falls back to shuffled joins under AQE."""
     if "toks" in toks.columns:
         # merge duplicate-id rows to their union set — the long form's
         # groupBy collect_set does this implicitly
@@ -471,10 +414,7 @@ def jaccard_pairs_sets(
         )
     else:
         sets = toks.groupBy("id").agg(F.collect_set("token").alias("tset"))
-    bcast_cap = _conf_threshold(
-        toks, "spark.graft.jaccard.broadcastSetRows", 200_000
-    )
-    if sets.count() <= bcast_cap:
+    if sets.count() <= JACCARD_BROADCAST_SET_ROWS:
         sets = F.broadcast(sets)
     a = sets.select(F.col("id").alias("id_a"), F.col("tset").alias("ta"))
     b = sets.select(F.col("id").alias("id_b"), F.col("tset").alias("tb"))
@@ -485,24 +425,6 @@ def jaccard_pairs_sets(
         .join(b, "id_b")
         .select("id_a", "id_b", (inter / union).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct (id, shingle) word n-grams — JVM-side via split +
-    transform over index range (no Python)."""
-    toks = F.split(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "), " ")
-    # docs with < n tokens yield no shingles; the guard keeps sequence()
-    # from ever seeing a descending (0, -1) span, which would make
-    # slice() throw INVALID_PARAMETER_VALUE.START on short/empty docs
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.expr("CAST(array() AS array<int>)"))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(sh).alias("shingle"))
-        .where(F.col("shingle") != "")
-        .distinct()
     )
 
 

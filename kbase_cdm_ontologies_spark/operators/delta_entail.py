@@ -60,6 +60,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.regime import route
 from ..plans.stats_cut import cut as _statscut
 from .closure import (
     _arrow_df,
@@ -80,6 +81,9 @@ from .closure import (
 )
 
 _SPO = ["subject", "predicate", "object"]
+# cone-key broadcast cap, sized to the session's broadcast budget:
+# ~2M interned keys is tens of MB framed; 8M risked hundreds of MB
+CONE_KEY_CAP = 2_000_000
 
 
 def _schema_slice(pruned: DataFrame) -> DataFrame:
@@ -249,20 +253,8 @@ def entail_delta(
     saved corpus (the add-a-source contract; see module docstring).
     delta_class_nodes defaults to the delta's own `rdf:type owl:Class`
     declarations."""
-    import os as _os
-    import time as _time
-
     spark = delta_statements.sparkSession
     hierarchy_old, transitive_old, chains_old = state.schema
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_DEBUG_CLOSURE"))
-    _t = _time.time()
-
-    def _phase(name: str) -> None:
-        nonlocal _t
-        if _dbg:
-            now = _time.time()
-            print(f"[delta] {name} {now - _t:.1f}s", flush=True)
-            _t = now
 
     if delta_class_nodes is None:
         delta_class_nodes = (
@@ -287,7 +279,6 @@ def entail_delta(
         _anti_vs_big(pruned_delta, state.pruned, _SPO, "subject"),
         eager=True,
     )
-    _phase("prune+intern_delta")
     pruned_union = state.pruned.unionByName(pruned_delta)
     schema_rows = _statscut(
         state.schema_rows.unionByName(_schema_slice(pruned_delta))
@@ -296,7 +287,6 @@ def entail_delta(
     )
     hierarchy, transitive, chains = property_schema(schema_rows)
 
-    _phase("schema")
     # ---- static subclass edge delta ----------------------------------
     sub_all_d = pruned_delta.where(
         (F.col("predicate") == "rdfs:subClassOf") & F.col("object").isNotNull()
@@ -340,7 +330,6 @@ def entail_delta(
         _anti_vs_big(static_raw, state.sub, ["s", "o"], "s"), eager=True
     )
 
-    _phase("static_edges")
     # ---- new reflexive rows / class growth ---------------------------
     new_cls_only = _statscut(
         delta_class_nodes.join(state.class_nodes, "id", "left_anti"),
@@ -356,7 +345,6 @@ def entail_delta(
         .distinct()
         .select(F.col("n").alias("s"), F.col("n").alias("o"))
     )
-    _phase("reflexive")
 
     # ---- ONE cone scan of the saved closure --------------------------
     # The saved rtc is transitively closed, so every old segment of a
@@ -407,13 +395,8 @@ def entail_delta(
         .distinct()
     )
     k_o = suffix_keys.unionByName(restr_ids).distinct()
-    # default sized to the session's broadcast budget: ~2M interned
-    # keys is tens of MB framed; 8M risked hundreds of MB per broadcast
-    cone_cap = _conf_threshold(
-        state.rtc, "spark.graft.deltaEntail.coneKeyCap", 2_000_000
-    )
     n_keys = k_s.count() + k_o.count()
-    bc = (lambda d: F.broadcast(d)) if n_keys <= cone_cap else (lambda d: d)
+    bc = (lambda d: F.broadcast(d)) if n_keys <= CONE_KEY_CAP else (lambda d: d)
     r_cone = _statscut(
         state.rtc
         .join(bc(k_s.withColumn("_fs", F.lit(True))), "s", "left")
@@ -445,14 +428,13 @@ def entail_delta(
     if n_wsubs:
         bc2 = (
             (lambda d: F.broadcast(d))
-            if n_wsubs <= cone_cap
+            if n_wsubs <= CONE_KEY_CAP
             else (lambda d: d)
         )
         scan2 = state.rtc.join(bc2(r_suf_subjects), "s", "left_semi")
         base_known = _statscut(
             r_cone.unionByName(scan2).dropDuplicates(), eager=True
         )
-    _phase("cone_scan")
 
     # ---- incremental subclass closure ⊕ union elimination ------------
     f0 = _statscut(f0_raw.join(base_known, ["s", "o"], "left_anti"), eager=True)
@@ -517,7 +499,6 @@ def entail_delta(
     n_dr = delta_r.count()
     rtc_new = state.rtc.unionByName(delta_r)
 
-    _phase("subclass_extend")
     # ---- base existential link delta ---------------------------------
     # semi-naive over the three-premise compose rtc ∘ restr ∘ rtc
     # (rectangle decomposition: the delta takes each premise slot once,
@@ -583,7 +564,6 @@ def entail_delta(
             )
         )
 
-    _phase("base_links")
     # ---- schema-delta seeds: old links under NEW rules ---------------
     pairs_old = {(p, q) for p, qs in hierarchy_old.items() for q in qs if q != p}
     pairs_new = {(p, q) for p, qs in hierarchy.items() for q in qs if q != p}
@@ -614,7 +594,6 @@ def entail_delta(
             )
         )
 
-    _phase("schema_seeds")
     # ---- property fixpoint warm start --------------------------------
     if seed_parts:
         seed = seed_parts[0]
@@ -642,7 +621,6 @@ def entail_delta(
         )
         links_d = _statscut(links_d, eager=True)
 
-    _phase("property_warm")
     # ---- individual typing delta -------------------------------------
     ta_delta_raw = (
         pruned_delta.where(
@@ -690,7 +668,6 @@ def entail_delta(
         )
     )
 
-    _phase("individuals")
     # ---- output delta ------------------------------------------------
     named = ~F.col("s").startswith("_:") & ~F.col("o").startswith("_:")
     cls_flag = class_nodes_new.select(
@@ -799,27 +776,31 @@ def _warm_property_closure(
             links, "spark.graft.deltaEntail.driverThreshold", 100_000
         )
     hier_rows = [(p, q) for p, qs in hierarchy.items() for q in qs if q != p]
-    if local_threshold:
-        u = links.unionByName(seed)
-        # limit-capped probe: a corpus-scale link set must not pay a
-        # full count just to learn it is over the driver threshold
-        if u.limit(local_threshold + 1).count() <= local_threshold:
-            pdf_old = links.toPandas()
-            rows_old = set(
-                zip(pdf_old["s"].tolist(), pdf_old["p"].tolist(), pdf_old["o"].tolist())
-            )
-            pdf_seed = seed.toPandas()
-            rows_in = rows_old | set(
-                zip(pdf_seed["s"].tolist(), pdf_seed["p"].tolist(), pdf_seed["o"].tolist())
-            )
-            closed = _local_property_saturation(
-                rows_in, hierarchy, transitive, chains, None,
-                keep_steps=True,
-            )
-            return (
-                _arrow_df(spark, sorted(closed), u.schema),
-                _arrow_df(spark, sorted(closed - rows_old), u.schema),
-            )
+    # ONE routed fetch of both inputs: seed rows tagged. Nothing here
+    # needs the exact count, so the probe stops one row past the bound:
+    # a corpus-scale link set never pays a full count to learn it is over
+    u = links.select(F.lit(False).alias("new"), "s", "p", "o").unionByName(
+        seed.select(F.lit(True).alias("new"), "s", "p", "o")
+    )
+    _, pdf = route(u.limit(local_threshold + 1), local_threshold)
+    if pdf is not None:
+        rows_old: set = set()
+        rows_in: set = set()
+        for new, s, p, o in zip(
+            pdf["new"].tolist(), pdf["s"].tolist(), pdf["p"].tolist(),
+            pdf["o"].tolist(),
+        ):
+            rows_in.add((s, p, o))
+            if not new:
+                rows_old.add((s, p, o))
+        closed = _local_property_saturation(
+            rows_in, hierarchy, transitive, chains, None, keep_steps=True,
+        )
+        schema = links.select("s", "p", "o").schema
+        return (
+            _arrow_df(spark, sorted(closed), schema),
+            _arrow_df(spark, sorted(closed - rows_old), schema),
+        )
     return _generic_property_fixpoint(
         spark, links, transitive, chains, hier_rows, None, None,
         max_rounds=10, seed_delta=seed, return_new=True,

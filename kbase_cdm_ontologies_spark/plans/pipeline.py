@@ -158,8 +158,7 @@ def run_pipeline(
         "m7_edges", fp3,
         [closure, canonicalize, class_node_ids],
         compute_edges,
-        # entailment phase walls land in the manifest: per-phase
-        # timings for the operator without SPARK_GRAFT_DEBUG_CLOSURE
+        # entailment phase walls land in the manifest
         metrics_fn=closure.phase_walls,
     )
     nodes = stage(

@@ -286,28 +286,6 @@ def test_property_edges_propagate_through_subclass(spark):
     assert {("w", "p", "y"), ("w", "p", "z"), ("x", "p", "z")} <= got
 
 
-def test_property_closure_bytes_guard_falls_back_to_distributed(spark):
-    """The driver fast path is guarded by estimated payload bytes as
-    well as rows: with driver_max_bytes=1 the saturation must run the
-    distributed fixpoint and still produce the identical result."""
-    from kbase_cdm_ontologies_spark.operators.closure import property_closure
-
-    edges = [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "d")]
-    df = spark.createDataFrame(edges, ["s", "p", "o"])
-    hierarchy = {"p": {"p", "q"}, "q": {"q"}}
-    kwargs = dict(hierarchy=hierarchy, transitive={"p"}, chains=[])
-    via_driver = {
-        (r["s"], r["p"], r["o"])
-        for r in property_closure(df, **kwargs).collect()
-    }
-    via_guard = {
-        (r["s"], r["p"], r["o"])
-        for r in property_closure(df, **kwargs, driver_max_bytes=1).collect()
-    }
-    assert via_guard == via_driver
-    assert ("a", "p", "d") in via_guard  # transitivity actually closed
-
-
 def test_domain_rule(spark):
     """rdfs:domain (Whelk role domains): a restriction node ∃p.C is a
     subclass of domain(p) — holders inherit it as a subclass edge, and
